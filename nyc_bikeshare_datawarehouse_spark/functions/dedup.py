@@ -846,7 +846,6 @@ def prefix_jaccard_candidates(
     id_col: str = "doc_id",
     shingle_n: int = 2,
     min_jaccard: float = 0.5,
-    positional: bool = False,
 ) -> DataFrame:
     """LOSSLESS candidate pairs for exact Jaccard >= t via prefix
     filtering (All-Pairs/PPJoin, Bayardo et al. WWW'07 / Xiao et al.
@@ -864,28 +863,36 @@ def prefix_jaccard_candidates(
       df-pruned form pays for the same effect with changed semantics).
     - the size-ratio filter rides the join condition (jaccard >= t
       forces |B| >= t*|A|), pruning size-incompatible pairs before the
-      pair distinct.
+      pair aggregate.
 
     Plan shape: document frequency and per-doc size/rank all come from
     WINDOW functions over the one shingle stream (two exchanges: by
-    shingle, then by doc) — no diverged aggregate-and-join-back, so the
-    shingle scan executes once per join side and Spark's ReuseExchange
-    dedups the identical a/b subplans below the self-join. Shuffle rows
-    are (shingle_hash, id, size) prefixes only. Candidates then go to
+    shingle, then by doc) — no diverged aggregate-and-join-back; both
+    join sides share those window stages (ReuseExchange). The ranked
+    postings are then hash-repartitioned on the shingle to
+    defaultParallelism; the prefix-length filters push below that
+    repartition, so each side of the `sh` self-join reads its own
+    shingle-hash exchange of prefix rows only. Without it AQE
+    size-coalesces the few-MB postings into ONE partition and the join
+    that emits millions of rows on a hot-bigram corpus runs in one
+    task. Shuffle rows are
+    (shingle_hash, id, size, rank) prefixes only. Candidates then go to
     `jaccard_verify_pairs`, which is per-pair codegen.
 
-    positional=True adds PPJoin's positional filter (Xiao et al. WWW'08
-    §3.1): each posting carries its rank under the GLOBAL (df, shingle)
-    total order, and a match at positions (pa, pb) bounds the true
-    overlap by min(pa, pb) + min(|A|-pa, |B|-pb) — common shingles
-    ordered <= the match number at most min(pa, pb), those after it at
-    most min of the remaining tail lengths. Rows whose bound cannot
-    reach the jaccard-required overlap t(|A|+|B|)/(1+t) are dropped
-    BEFORE the pair distinct, so a hot prefix shingle shared by two
-    size-compatible docs no longer forces the pair into the verify
-    stage. Still lossless: the bound over-estimates, the epsilon slack
-    only ever keeps extra candidates, and `jaccard_verify_pairs` stays
-    the exact arbiter.
+    PER-PAIR OVERLAP BOUND (PPJoin's positional filter, Xiao et al.
+    WWW'08 §3.1, applied per pair): each posting carries its rank under
+    the GLOBAL (df, shingle) total order, so the shared shingles of two
+    documents appear in the same order in both. One aggregate per pair
+    computes c = number of prefix matches and the positions (pa, pb) of
+    the LAST match. Every common shingle ordered before that match lies
+    inside both prefixes, so c already counts it; those after it number
+    at most min(|A|-pa, |B|-pb). A pair whose bound
+    c + min(|A|-pa, |B|-pb) cannot reach the jaccard-required overlap
+    t(|A|+|B|)/(1+t) is dropped before verify. The bound over-estimates
+    and the epsilon slack only keeps extra candidates, so this stays
+    lossless; `jaccard_verify_pairs` is the exact arbiter. It is never
+    looser than the per-row bound min(pa, pb) + min(|A|-pa, |B|-pb)
+    (c <= min(pa, pb) at the last match).
 
     PROBING-PREFIX asymmetry (All-Pairs §3.2, r13, always on): for a
     pair with |A| <= |B| (ties by id), jaccard >= t forces overlap
@@ -894,10 +901,12 @@ def prefix_jaccard_candidates(
     join (~|A|/3 at t=0.5 vs the ~|A|/2 indexing prefix), while the
     larger side keeps the full indexing prefix (alpha >= t·|B| needs
     the size filter |A| >= t·|B|, which rides the join). The join is
-    ordered — probe side strictly (size, id)-smaller — so each pair is
-    generated once and the output is normalized to id_a < id_b.
+    ordered — probe side strictly (size, id)-smaller — so each pair
+    keeps one orientation through the aggregate and the output is
+    normalized to id_a < id_b.
     """
     probe_frac = 2.0 * min_jaccard / (1.0 + min_jaccard)
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
     sh = shingle_postings(df, text_col, id_col, shingle_n)
     w_df = Window.partitionBy("sh")
     w_doc = Window.partitionBy(id_col)
@@ -906,57 +915,48 @@ def prefix_jaccard_candidates(
         sh.withColumn("__df", F.count(F.lit(1)).over(w_df))
         .withColumn("n_sh", F.count(F.lit(1)).over(w_doc))
         .withColumn("__rk", F.row_number().over(w_rank))
+        .repartition(parallelism, "sh")
     )
     index_len = F.col("n_sh") - F.ceil(F.lit(min_jaccard) * F.col("n_sh")) + 1
     probe_len = F.col("n_sh") - F.ceil(F.lit(probe_frac) * F.col("n_sh")) + 1
-    index_side = ranked.filter(F.col("__rk") <= index_len).select(
-        id_col, "sh", "n_sh", "__rk"
-    )
-    probe_side = ranked.filter(F.col("__rk") <= probe_len).select(
-        id_col, "sh", "n_sh", "__rk"
-    )
-    a = probe_side.select(
+    a = ranked.filter(F.col("__rk") <= probe_len).select(
         F.col(id_col).alias("id_a"), "sh", F.col("n_sh").alias("n_a"), F.col("__rk").alias("pa")
     )
-    b = index_side.select(
+    b = ranked.filter(F.col("__rk") <= index_len).select(
         F.col(id_col).alias("id_b"), "sh", F.col("n_sh").alias("n_b"), F.col("__rk").alias("pb")
     )
     joined = a.join(b, "sh").filter(
         # probe side strictly (size, id)-smaller: each unordered pair
-        # appears exactly once, with the smaller doc probing
+        # appears in exactly one orientation, with the smaller doc probing
         (
             (F.col("n_a") < F.col("n_b"))
             | ((F.col("n_a") == F.col("n_b")) & (F.col("id_a") < F.col("id_b")))
         )
         & (F.col("n_a") >= F.col("n_b") * min_jaccard)
     )
-    if positional:
-        overlap_ub = F.least("pa", "pb") + F.least(
-            F.col("n_a") - F.col("pa"), F.col("n_b") - F.col("pb")
+    pairs = (
+        # ONE exchange groups AND spreads the pair stream: the
+        # hash repartition on the pair satisfies the aggregate's
+        # distribution, so no second exchange follows, and it is already
+        # spread over defaultParallelism for the CPU-bound verify (AQE
+        # would otherwise size-coalesce the pair list to ~2 partitions).
+        joined.repartition(parallelism, "id_a", "id_b")
+        .groupBy("id_a", "id_b")
+        .agg(
+            F.count(F.lit(1)).alias("__c"),
+            F.max("pa").alias("pa"),
+            F.max("pb").alias("pb"),
+            F.max("n_a").alias("n_a"),
+            F.max("n_b").alias("n_b"),
         )
-        required = (F.col("n_a") + F.col("n_b")) * (min_jaccard / (1.0 + min_jaccard))
-        joined = joined.filter(overlap_ub.cast("double") >= required - 1e-9)
-    return (
-        joined.select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-        )
-        # ONE exchange dedups AND spreads the pair stream (r15): a plain
-        # .distinct() partial-aggregates the ~2x-duplicated join output,
-        # exchanges, final-aggregates — and AQE then size-coalesces the
-        # ~77 MB pair list to ~2 partitions, forcing callers to pay a
-        # SECOND full pair shuffle (repartition) before the CPU-bound
-        # verify (the documented size-coalescer mispricing). Hash-
-        # repartitioning on the pair first satisfies the aggregation's
-        # distribution requirement, so Catalyst plans one complete
-        # HashAggregate after a single exchange, already spread over
-        # defaultParallelism for the verify stage (scale-adaptive: cores,
-        # not a constant). Measured at sf0.1: candidates 13.7s -> 6.5s,
-        # q_jaccard_prefix end-to-end 17.7s -> 7.3s, 2 Exchange -> 1.
-        .repartition(
-            df.sparkSession.sparkContext.defaultParallelism, "id_a", "id_b"
-        )
-        .dropDuplicates()
+    )
+    overlap_ub = F.col("__c") + F.least(
+        F.col("n_a") - F.col("pa"), F.col("n_b") - F.col("pb")
+    )
+    required = (F.col("n_a") + F.col("n_b")) * (min_jaccard / (1.0 + min_jaccard))
+    return pairs.filter(overlap_ub.cast("double") >= required - 1e-9).select(
+        F.least("id_a", "id_b").alias("id_a"),
+        F.greatest("id_a", "id_b").alias("id_b"),
     )
 
 

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from nyc_bikeshare_datawarehouse_spark.functions.text import bigram_logprob, tokens
+from nyc_bikeshare_datawarehouse_spark.functions.text import bigram_logprob, tokens, with_tokens
 
 
 def _trunc(col, decimals: int):
@@ -39,15 +39,18 @@ def _trunc(col, decimals: int):
 def _bigram_buckets(text_col: str, n_buckets: int, salt: str = "dsir") -> Column:
     """Hashed-bigram feature stream: adjacent-token pairs mapped to
     `n_buckets` ints via the portable md5-prefix hash (the
-    `_salted_token_hashes` idiom — replayable in any engine with md5)."""
-    t = tokens(text_col)
-    grams = F.when(
-        F.size(t) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(t) - 1),
-            lambda i: F.concat_ws(" ", F.element_at(t, i), F.element_at(t, i + 1)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    `_salted_token_hashes` idiom — replayable in any engine with md5);
+    the text is tokenized once per row (`with_tokens`)."""
+    grams = with_tokens(
+        text_col,
+        lambda t: F.when(
+            F.size(t) >= 2,
+            F.transform(
+                F.sequence(F.lit(1), F.size(t) - 1),
+                lambda i: F.concat_ws(" ", F.element_at(t, i), F.element_at(t, i + 1)),
+            ),
+        ).otherwise(F.array().cast("array<string>")),
+    )
     return F.transform(
         grams,
         lambda g: F.conv(

@@ -34,6 +34,18 @@ def tokens(text_col: str | Column, sep: str = " ") -> Column:
     return F.filter(F.split(c, sep), lambda t: t != "")
 
 
+def with_tokens(text_col: str | Column, body) -> Column:
+    """`body(t)` over the token array `t`, tokenized ONCE per row.
+
+    Higher-order functions run interpreted, so a `tokens()` expression
+    captured inside a lambda re-runs `filter(split(text))` for every
+    element the lambda visits. Wrapping the array in a one-element
+    `transform` binds it to a lambda variable that every reference in
+    `body` reads. `body` takes one argument (a 2-arg lambda would
+    receive the index)."""
+    return F.transform(F.array(tokens(text_col)), body)[0]
+
+
 def bpe_ish_tokens(text_col: str | Column) -> Column:
     """Regex token split approximating a BPE pre-tokenizer: letter runs,
     digit runs, and individual symbols (public GPT-2-style pre-tokenize
@@ -126,14 +138,18 @@ def shingles(text_col: str | Column, n: int = 3) -> Column:
     """n-gram (word shingle) array — the unit for MinHash/Jaccard near-dup.
 
     Built from a sliding window over the token array with `transform` +
-    `slice` (pure built-ins, no UDF)."""
-    t = tokens(text_col)
-    count = F.greatest(F.size(t) - F.lit(n - 1), F.lit(0))
-    idx = F.sequence(F.lit(1), F.greatest(count, F.lit(1)))
-    return F.when(
-        F.size(t) >= n,
-        F.transform(idx, lambda i: F.array_join(F.slice(t, i, n), " ")),
-    ).otherwise(F.array(F.array_join(t, " ")))
+    `slice` (pure built-ins, no UDF); the text is tokenized once per row
+    (`with_tokens`), not once per window."""
+
+    def windows(t: Column) -> Column:
+        count = F.greatest(F.size(t) - F.lit(n - 1), F.lit(0))
+        idx = F.sequence(F.lit(1), F.greatest(count, F.lit(1)))
+        return F.when(
+            F.size(t) >= n,
+            F.transform(idx, lambda i: F.array_join(F.slice(t, i, n), " ")),
+        ).otherwise(F.array(F.array_join(t, " ")))
+
+    return with_tokens(text_col, windows)
 
 
 def rolling_hash_fingerprint(text_col: str | Column, n: int = 3) -> Column:
@@ -586,23 +602,26 @@ def remove_boilerplate(
     reassembly is a per-document collect of that document's OWN
     segments (bounded by document length, never corpus-sized). Linear
     end to end."""
-    t = tokens(text_col)
+
     # sequence(0, -1) DESCENDS ([0,-1], pinned gotcha): a zero-token doc
     # would emit two phantom '' segments while SQL range(0,0) is empty.
     # Guard on size >= 1 so empty/whitespace-only docs explode to zero
     # rows in both engines (the _bigram_buckets guard pattern).
-    seg_windows = F.when(
-        F.size(t) >= 1,
-        F.transform(
-            F.sequence(F.lit(0), F.ceil(F.size(t) / seg_len).cast("long") - 1),
-            lambda i: F.struct(
-                i.alias("idx"),
-                F.concat_ws(
-                    " ", F.slice(t, i * seg_len + 1, seg_len)
-                ).alias("seg"),
+    def windows(t: Column) -> Column:
+        return F.when(
+            F.size(t) >= 1,
+            F.transform(
+                F.sequence(F.lit(0), F.ceil(F.size(t) / seg_len).cast("long") - 1),
+                lambda i: F.struct(
+                    i.alias("idx"),
+                    F.concat_ws(
+                        " ", F.slice(t, i * seg_len + 1, seg_len)
+                    ).alias("seg"),
+                ),
             ),
-        ),
-    ).otherwise(F.array().cast("array<struct<idx:long,seg:string>>"))
+        ).otherwise(F.array().cast("array<struct<idx:long,seg:string>>"))
+
+    seg_windows = with_tokens(text_col, windows)
     segs = df.select(
         F.col(id_col),
         F.col(group_col),

@@ -2092,26 +2092,29 @@ def q_jaccard_prefix(spark, sf_dir):
     exists. This is the exact-semantics scale path (the df-pruned form
     trades semantics for the same effect).
 
-    HONEST REGIME NOTE (measured, BASELINE.md round 6): the win premise
-    is a Zipf vocabulary — prefixes made of RARE shingles. This corpus
-    is the opposite (931 distinct bigrams over 5000 docs at sf0.1, all
-    hot), so the prefix only halves the pair universe (5.5M of 10.3M)
-    and the query runs ~1.3× the full inverted index instead of beating
-    it; the unit suite demonstrates the Zipf regime where candidates
-    collapse by orders of magnitude. Spreading the pairs before verify
-    matters: AQE size-coalesces the ~5M-pair distinct to ~2 partitions
-    (~80 MB looks "small"), then the CPU-bound array_intersect stage
-    runs on 2 of 32 cores — size heuristics misprice compute-heavy rows
-    (145.7s → 47.9s same-load, r-series). Since r15 the spread is FUSED
-    with the pair dedup inside prefix_jaccard_candidates (one exchange
-    doing repartition + complete-mode dropDuplicates instead of
-    distinct-then-repartition's two full pair shuffles)."""
+    HONEST REGIME NOTE (measured, BASELINE.md round 6; perfbench
+    traced run): the win premise is a Zipf vocabulary — prefixes made
+    of RARE shingles. This corpus is the opposite (931 distinct bigrams
+    over 5000 docs at sf0.1, all hot), so the prefix join still emits
+    millions of rows (5.76M over the first 4000 docs). The hot keys
+    show as VOLUME, not skew (task skew 1.05-1.16), so salting them
+    would not help; what does is spreading and pruning the volume:
+    - the prefix self-join reads an explicit shingle-hash repartition
+      to defaultParallelism (AQE had coalesced the ~2 MB postings into
+      ONE partition, so the join ran in one task);
+    - the pair aggregate applies the per-pair PPJoin overlap bound
+      (3.07M -> 1.74M candidates on those 4000 docs) inside the one
+      (id_a, id_b) exchange that also spreads the pairs for the
+      CPU-bound array_intersect verify (AQE size-coalesces a pair list
+      to ~2 partitions otherwise; 145.7s -> 47.9s same-load when the
+      spread was first added);
+    - shingles() tokenizes each text once, not once per window.
+    The unit suite demonstrates the Zipf regime where candidates
+    collapse by orders of magnitude."""
     d = _t(spark, sf_dir, "documents")
     d2 = d.filter(F.size(text.tokens("text")) >= 2)
-    # r15: the explicit pre-verify repartition moved INSIDE
-    # prefix_jaccard_candidates, fused with the pair dedup into one
-    # exchange (distinct + repartition was two full pair shuffles;
-    # 17.7s -> 7.3s end-to-end, plans/r15/q_jaccard_prefix_*.txt)
+    # the pair spread, the per-pair bound and the join spread all live
+    # inside prefix_jaccard_candidates (plans/r17/q_jaccard_prefix_*.txt)
     cand = dedup.prefix_jaccard_candidates(
         d2, "text", "doc_id", shingle_n=2, min_jaccard=0.5
     )

@@ -60,6 +60,16 @@ class TestText:
         short = spark.createDataFrame([("a b",)], "text string")
         assert short.select(text.shingles("text", 3).alias("s")).first()["s"] == ["a b"]
 
+    def test_shingles_tokenize_once(self, spark):
+        # the token array is bound once per row (text.with_tokens): the
+        # sliding-window lambda must not re-run split() per window
+        df = spark.createDataFrame([("a b c d",)], "text string")
+        plan = (
+            df.select(text.shingles("text", 2).alias("s"))
+            ._jdf.queryExecution().optimizedPlan().toString()
+        )
+        assert plan.count("split(") == 1
+
     def test_length_histogram_buckets(self, spark):
         # bucket b = [2^(b-1), 2^b): n_tokens 1 -> b1, {2,3} -> b2,
         # {4..7} -> b3, 8 -> b4; empty docs are excluded entirely
@@ -210,12 +220,12 @@ class TestDedup:
         # is doc 1's rarest token (probe position 1, inside its
         # 3-token probing prefix) and sits at position 4 of doc 2 —
         # the last slot of its 4-token indexing prefix. Overlap bound
-        # min(1,4) + min(6-1, 6-4) = 3 < required 12/3 = 4, so the
-        # (1,2) candidate dies before verify. m/k tokens get df 3 via
-        # the filler docs so `s` (df 2) outranks them in doc 1 while
-        # the df-1 u tokens outrank it in doc 2. True pairs
-        # ((1,3)/(1,4) at jaccard 5/8, (3,4) identical) have aligned
-        # early matches — never pruned.
+        # 1 + min(6-1, 6-4) = 3 < required 12/3 = 4, so the (1,2)
+        # candidate dies before verify. m/k tokens get df 3 via the
+        # filler docs so `s` (df 2) outranks them in doc 1 while the
+        # df-1 u tokens outrank it in doc 2. True pairs ((1,3)/(1,4) at
+        # jaccard 5/8, (3,4) identical) have aligned early matches —
+        # never pruned.
         rows = [
             (1, "s m1 m2 m3 m4 m5"),
             (2, "u1 u2 u3 s k1 k2"),
@@ -224,26 +234,57 @@ class TestDedup:
         ]
         df = spark.createDataFrame(rows, "doc_id long, text string")
         kw = dict(text_col="text", id_col="doc_id", shingle_n=1, min_jaccard=0.5)
-        base = {(r["id_a"], r["id_b"])
+        cand = {(r["id_a"], r["id_b"])
                 for r in dedup.prefix_jaccard_candidates(df, **kw).collect()}
-        pos = {(r["id_a"], r["id_b"])
-               for r in dedup.prefix_jaccard_candidates(df, positional=True, **kw).collect()}
-        assert pos <= base and pos < base  # strictly prunes on this shape
         verified = {
-            (r["id_a"], r["id_b"])
-            for r in dedup.jaccard_verify_pairs(
-                df, dedup.prefix_jaccard_candidates(df, positional=True, **kw), **kw
-            ).collect()
-        }
-        # ground truth from the all-candidate verify: nothing lost
-        truth = {
             (r["id_a"], r["id_b"])
             for r in dedup.jaccard_verify_pairs(
                 df, dedup.prefix_jaccard_candidates(df, **kw), **kw
             ).collect()
         }
-        assert (1, 2) in base and (1, 2) not in pos  # the engineered prune
+        # ground truth from the full inverted index: nothing lost
+        truth = {
+            (r["id_a"], r["id_b"])
+            for r in dedup.ngram_jaccard_pairs(df, **kw).collect()
+        }
+        assert (1, 2) not in cand  # the engineered prune
         assert verified == truth == {(1, 3), (1, 4), (3, 4)}
+
+    def test_prefix_pair_bound_tighter_than_row_bound(self, spark):
+        # docs 1 and 2 (both n=6, doc 1 probes) share only `s`: probe
+        # position 3 of doc 1 (after the df-1 p tokens, inside its
+        # 3-token probing prefix), index position 4 of doc 2 (after the
+        # df-1 q tokens, last slot of its 4-token indexing prefix). The
+        # per-ROW bound min(3,4) + min(6-3, 6-4) = 5 reaches the
+        # required 12/3 = 4 and keeps the pair; the per-PAIR bound knows
+        # that no earlier shingle matched: 1 + min(3, 2) = 3 < 4 drops
+        # it. m/k tokens get df 3 from the filler docs 3 and 4.
+        rows = [
+            (1, "p1 p2 s m1 m2 m3"),
+            (2, "q1 q2 q3 s k1 k2"),
+            (3, "m1 m2 m3 m4 m5 k1 k2"),
+            (4, "m1 m2 m3 m4 m5 k1 k2"),
+        ]
+        # positions under the (df, token) order, from the data itself
+        dfreq = {}
+        for _, t in rows:
+            for tok in set(t.split()):
+                dfreq[tok] = dfreq.get(tok, 0) + 1
+        pa, pb = (
+            1 + sum(dfreq[tok] < dfreq["s"] for tok in t.split())
+            for _, t in rows[:2]
+        )
+        assert (pa, pb) == (3, 4)
+        n, required = 6, 12 / 3
+        assert min(pa, pb) + min(n - pa, n - pb) >= required  # row bound keeps
+        assert 1 + min(n - pa, n - pb) < required  # pair bound drops
+
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        kw = dict(text_col="text", id_col="doc_id", shingle_n=1, min_jaccard=0.5)
+        cand = {(r["id_a"], r["id_b"])
+                for r in dedup.prefix_jaccard_candidates(df, **kw).collect()}
+        assert (1, 2) not in cand
+        assert (3, 4) in cand
 
     def test_minhash_est_jaccard(self, spark, docs):
         pairs = dedup.minhash_lsh_candidates(docs, num_hashes=32, bands=8)

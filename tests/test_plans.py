@@ -124,6 +124,24 @@ def test_embed_near_dup_shuffles_ids_not_vectors(spark, sf_dir):
     assert "roundrobinpartitioning" not in plan
 
 
+def test_jaccard_prefix_join_and_pair_stage_spread(spark, sf_dir):
+    # the sh self-join reads EXPLICIT shingle-hash repartitions (one per
+    # side: the prefix-length filters push below the repartition), so
+    # AQE's size coalescer cannot fold the few-MB postings into the one
+    # task that used to emit every candidate row
+    plan = plan_of(spark, sf_dir, "q_jaccard_prefix")
+    assert len(re.findall(
+        r"Exchange hashpartitioning\(sh#\d+L, \d+\), REPARTITION_BY_NUM", plan
+    )) == 2
+    # the per-pair bound aggregates inside the ONE (id_a, id_b) exchange
+    # that also spreads the pairs for the verify
+    assert len(re.findall(r"Exchange hashpartitioning\(id_a", plan)) == 1
+    assert re.search(
+        r"Exchange hashpartitioning\(id_a#\d+L, id_b#\d+L, \d+\), REPARTITION_BY_NUM",
+        plan,
+    )
+
+
 def test_tpch_q9_broadcasts_dimensions(spark, sf_dir):
     # part/supplier/nation are dimension-sized: the 5-way lattice must
     # broadcast them, leaving orders<->lineitem as the only possible
